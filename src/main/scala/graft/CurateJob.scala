@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.checkpoint.Resume
+import graft.model.PartitionMetrics
 import graft.tableio.TableIO
 
 /** Production entry point — the spark-submit face of the engine:
@@ -17,9 +18,20 @@ import graft.tableio.TableIO
   * (checkpoint/Resume). On a cluster the session comes from
   * spark-submit's conf (executor count/memory set there — the N vs 4N
   * executor scaling axis); local runs honor SPARK_GRAFT_CPUS.
-  * Exit summary (one JSON line) reports per-run lineage totals.
+  * Progress: one JSON line per committed partition (part_id,
+  * turns_seen/kept/dropped, commit_ms = ms from the partition's read to
+  * its manifest write), from the metrics observed on its commit write.
+  * Exit summary (one JSON line, always the last) reports per-run
+  * lineage totals.
   */
 object CurateJob {
+  /** The progress line of one committed partition. */
+  def progressLine(m: PartitionMetrics, commitMs: Long): String =
+    s"""{"part_id":${m.part_id},"turns_seen":${m.turns_seen},""" +
+      s""""turns_kept":${m.turns_kept.getOrElse(0L)},""" +
+      s""""turns_dropped":${m.turns_dropped.getOrElse(0L)},""" +
+      s""""commit_ms":$commitMs}"""
+
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
       case Array(k, v) if k.startsWith("--") => k.stripPrefix("--") -> v
@@ -47,7 +59,8 @@ object CurateJob {
     val t0 = System.nanoTime()
     val result = Resume.run(spark, input, output,
       writePartitions = writeParts, maxPartitions = maxParts,
-      concurrency = concurrency)
+      concurrency = concurrency,
+      onCommit = (m, ms) => println(progressLine(m, ms)))
     val sec = (System.nanoTime() - t0) / 1e9
 
     // roll up manifests for the exit summary

@@ -43,13 +43,14 @@ final case class CuratedTurn(
 )
 
 /** Per-partition metrics row — rebuild of the reference's
-  * `correction_stats` (smart_corrector.py:90-96, 252-260).
+  * `correction_stats` (smart_corrector.py:90-96, 252-260). turns_kept
+  * and turns_dropped are sums, None (null) over no rows.
   */
 final case class PartitionMetrics(
     part_id: Int,
     turns_seen: Long,
-    turns_kept: Long,
-    turns_dropped: Long,
+    turns_kept: Option[Long],
+    turns_dropped: Option[Long],
     dropped_by_rule: Map[String, Long],
     scrub_hit_counts: Map[String, Long]
 )

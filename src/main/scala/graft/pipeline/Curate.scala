@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, functions
 
 import graft.langid.{LangId, LangIdModel}
 import graft.lm.NGramLM
-import graft.model.Turn
+import graft.model.{PartitionMetrics, Turn}
 import graft.rules.{GrammarRules, QualityRules}
 import graft.scrub.Scrubber
 import graft.synth.Transcripts
@@ -16,8 +16,8 @@ import graft.synth.Transcripts
   *   → (gated) perplexity → keep/drop decision → scrub → curated
   *
   * One lazily-built DataFrame plan, map-only (NO shuffle on the hot
-  * path — the per-turn pipeline is embarrassingly parallel; the only
-  * shuffles in the whole flow are the tiny metrics aggregations).
+  * path — the per-turn pipeline is embarrassingly parallel; the
+  * commit's metrics are observed on the write, see [[metricSums]]).
   *
   * Expensive-operator gating is STRUCTURAL, mirroring the reference's
   * "only error chunks reach the LLM" short-circuit
@@ -189,35 +189,95 @@ object Curate {
     curateDf(spark, turns.toDF(), cfg, models).as[graft.model.CuratedTurn]
   }
 
-  /** Per-run metrics — rebuild of the reference's summary aggregates
-    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2). Two tiny
-    * shuffles over already-reduced data (map-side partial aggregation
-    * is automatic for hash aggregates).
+  private def ruleCount(r: String) = s"dropped_$r"
+  private def scrubSum(k: String) = s"scrub_$k"
+  private def scrubRows(k: String) = s"scrub_rows_$k"
+  private val scrubEntries = "scrub_entries"
+  private def scrubKeys: Seq[String] = Scrubber.patternSpecs.map(_._1)
+
+  /** The per-partition metric sums, defined once: observed on
+    * `Resume`'s commit write and aggregated by [[metrics]]. Both key
+    * sets are fixed (QualityRules.ruleOrder, Scrubber.patternSpecs),
+    * so every figure is a scalar sum: per rule the rows it dropped, per
+    * scrub key the summed hits and the rows carrying the key, plus the
+    * total scrub entries, which exposes a key outside the fixed set.
     */
-  def metrics(curated: DataFrame, partId: Int = 0): DataFrame = {
-    val byRule = curated
-      .filter(F.col("drop_reason").isNotNull)
-      .groupBy("drop_reason").count()
-      .agg(F.map_from_entries(
-        F.sort_array(F.collect_list(F.struct(F.col("drop_reason"), F.col("count")))))
-        .as("dropped_by_rule"))
-    val scrubCounts = curated
-      .select(F.explode_outer(F.col("scrub_hits")).as(Seq("k", "v")))
-      .filter(F.col("k").isNotNull)
-      .groupBy("k").agg(F.sum("v").cast("long").as("n"))
-      .agg(F.map_from_entries(
-        F.sort_array(F.collect_list(F.struct(F.col("k"), F.col("n")))))
-        .as("scrub_hit_counts"))
-    val base = curated.agg(
+  lazy val metricSums: Seq[Column] = {
+    val hits = F.col("scrub_hits")
+    Seq(
       F.count(F.lit(1)).as("turns_seen"),
       F.sum(F.when(F.col("keep"), 1L).otherwise(0L)).as("turns_kept"),
-      F.sum(F.when(F.col("keep"), 0L).otherwise(1L)).as("turns_dropped"))
-    base
-      .crossJoin(byRule)
-      .crossJoin(scrubCounts)
-      .withColumn("part_id", F.lit(partId))
-      .select("part_id", "turns_seen", "turns_kept", "turns_dropped",
-        "dropped_by_rule", "scrub_hit_counts")
+      F.sum(F.when(F.col("keep"), 0L).otherwise(1L)).as("turns_dropped"),
+      F.sum(F.when(hits.isNotNull, F.size(hits))).as(scrubEntries)) ++
+      QualityRules.ruleOrder.map(r =>
+        F.sum(F.when(F.col("drop_reason") === r, 1L).otherwise(0L)).as(ruleCount(r))) ++
+      scrubKeys.flatMap(k => Seq(
+        F.sum(hits(k)).as(scrubSum(k)),
+        F.count(hits(k)).as(scrubRows(k))))
+  }
+
+  private val unknownRule =
+    "per-rule drop counts do not add up to turns_dropped: " +
+      "a drop_reason outside QualityRules.ruleOrder"
+  private val unknownScrubKey =
+    "per-key scrub rows do not add up to the scrub entries: " +
+      "a scrub key outside Scrubber.patternSpecs"
+
+  /** The metrics row of one partition from the values of
+    * [[metricSums]] by name (an observation, or a row of [[metrics]]'s
+    * aggregate). Maps keep only keys that occurred; over no rows
+    * turns_kept and turns_dropped are None, as [[metrics]]'s nulls.
+    * Fails if a drop reason or scrub key lies outside the fixed sets,
+    * instead of leaving it out of the maps.
+    */
+  def partitionMetrics(partId: Int, sums: Map[String, Any]): PartitionMetrics = {
+    require(sums.nonEmpty, s"part $partId: no metrics were observed")
+    def opt(name: String): Option[Long] =
+      Option(sums(name)).map(_.asInstanceOf[Number].longValue)
+    def long(name: String): Long = opt(name).getOrElse(0L)
+    val byRule = QualityRules.ruleOrder.map(r => r -> long(ruleCount(r)))
+    val rows = scrubKeys.map(k => k -> long(scrubRows(k)))
+    require(byRule.map(_._2).sum == long("turns_dropped"), s"part $partId: $unknownRule")
+    require(rows.map(_._2).sum == long(scrubEntries), s"part $partId: $unknownScrubKey")
+    PartitionMetrics(partId, long("turns_seen"), opt("turns_kept"), opt("turns_dropped"),
+      byRule.filter(_._2 > 0).toMap,
+      rows.collect { case (k, n) if n > 0 => k -> long(scrubSum(k)) }.toMap)
+  }
+
+  /** Per-run metrics — rebuild of the reference's summary aggregates
+    * (smart_corrector.py:229-260, SURVEY.md §2.9 A2): one aggregate
+    * over [[metricSums]], then a projection into the two maps
+    * (sorted keys, zero-count keys left out, `{}` when none). Over no
+    * rows, turns_kept and turns_dropped are null. Fails, like
+    * [[partitionMetrics]], on a drop reason or scrub key outside the
+    * fixed sets.
+    */
+  def metrics(curated: DataFrame, partId: Int = 0): DataFrame = {
+    def sorted(entries: Seq[(String, String, String)]): Column =
+      F.map_from_entries(F.transform(
+        F.filter(
+          F.array(entries.sortBy(_._1).map { case (k, v, n) =>
+            F.struct(F.lit(k).as("k"), F.col(v).as("v"), F.col(n).as("n"))
+          }: _*),
+          e => e.getField("n") > 0),
+        e => F.struct(e.getField("k"), e.getField("v"))))
+    def total(cols: Seq[String]): Column =
+      cols.map(c => F.coalesce(F.col(c), F.lit(0L))).reduce(_ + _)
+    curated
+      .agg(metricSums.head, metricSums.tail: _*)
+      .select(
+        F.lit(partId).as("part_id"),
+        F.col("turns_seen"),
+        F.col("turns_kept"),
+        F.when(total(QualityRules.ruleOrder.map(ruleCount)) =!= total(Seq("turns_dropped")),
+          F.raise_error(F.lit(unknownRule)))
+          .when(total(scrubKeys.map(scrubRows)) =!= total(Seq(scrubEntries)),
+            F.raise_error(F.lit(unknownScrubKey)))
+          .otherwise(F.col("turns_dropped")).as("turns_dropped"),
+        sorted(QualityRules.ruleOrder.map(r => (r, ruleCount(r), ruleCount(r))))
+          .as("dropped_by_rule"),
+        sorted(scrubKeys.map(k => (k, scrubSum(k), scrubRows(k))))
+          .as("scrub_hit_counts"))
   }
 
   /** Two-phase ordered per-conversation reassembly (SURVEY.md §2.7 R3

@@ -5,6 +5,10 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 /** Iceberg-shaped table seam (SURVEY.md §1.2): Hive-style partitioned
@@ -21,9 +25,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   *                                  partition: lineage + metrics
   *
   * Commit protocol per partition: write to _staging → atomic directory
-  * move into place → append manifest file. A crash between move and
-  * manifest leaves the partition NOT in the manifest; the resume loop
-  * simply reprocesses it (output is deterministic → byte-identical).
+  * move into place → validate: the row count in the committed files'
+  * parquet footers, read on the driver with no Spark job
+  * ([[committedRows]]), must equal the row count the write observed →
+  * append manifest file. A crash or a failed validation between move
+  * and manifest leaves the partition NOT in the manifest; the resume
+  * loop simply reprocesses it (output is deterministic →
+  * byte-identical).
   */
 object TableIO {
 
@@ -60,6 +68,23 @@ object TableIO {
     Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
     target
   }
+
+  /** Rows in a committed partition dir, summed from its parquet
+    * footers on the driver: no Spark job, no data page read.
+    */
+  def committedRows(dir: Path): Long = {
+    val files = Files.list(dir)
+    try files.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .map { f =>
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new HPath(f.toUri), footerConf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
+    finally files.close()
+  }
+
+  private lazy val footerConf = new Configuration()
 
   /** Append the manifest entry LAST — this is the commit point. */
   def writeManifest(base: String, partId: Int, json: String): Unit = {
